@@ -245,7 +245,13 @@ class IndexBuilder:
         Tokenizer callable captured directly in the task closure — the
         distributed-safe way to use a custom analyzer (driver-side
         ``register_analyzer`` mutations are NOT visible to executor processes,
-        which re-import the registry module)."""
+        which re-import the registry module).
+
+        ``num_segments`` is an UPPER bound when the input is a bare parquet
+        scan (the footer fast path, :meth:`_footer_segment_groups`): a
+        segment is a run of whole input row groups, so an input with fewer
+        row groups yields fewer segments. ``meta["segment_ids"]`` lists the
+        segments actually built."""
         self.spark = spark
         self.index_path = index_path
         self.analyzer = analyzer
@@ -1132,14 +1138,16 @@ class IndexBuilder:
                     norm_pdf["field"].fillna(default_field) == default_field
                 ]
             total_docs = int(norm_pdf["docs_count"].sum())
+            segment_ids = sorted({int(x) for x in norm_pdf["segment_id"]})
         else:
-            total_docs = sum(
-                int(r["docs_count"])
-                for r in spark.read.parquet(*norms_paths)
+            rows = (
+                spark.read.parquet(*norms_paths)
                 .where(F.col("field") == default_field)
                 .select("segment_id", "docs_count")
                 .collect()
             )
+            total_docs = sum(int(r["docs_count"]) for r in rows)
+            segment_ids = sorted({int(r["segment_id"]) for r in rows})
         tables = dict(carry_tables or {})
         tables.update(
             {
@@ -1163,6 +1171,8 @@ class IndexBuilder:
             "with_positions": self.with_positions,
             "num_segments": num_segments,
             "next_segment_id": next_segment_id,
+            # live ids (segments holding docs): query tasks launch one per id
+            "segment_ids": segment_ids,
             "postings_partitions": p_parts,
             "docs_count": total_docs,
             "doc_cols": doc_cols,

@@ -520,16 +520,7 @@ def consolidate(
 
     # ---- norms ----
     t0 = time.time()
-    # raw norms table (NOT reader.norms(), which joins the delete mask in)
-    norm_cols = [
-        c
-        for c in (
-            "field", "segment_id", "chunk_id", "docs_count", "doc_len_enc",
-            "docs_with_field", "sum_len", "min_len",
-        )
-        if c in reader._table("norms").columns
-    ]
-    norms = reader._table("norms").select(*norm_cols)
+    norms = reader.norms(all_fields=True)
     if "field" not in norms.columns:
         # legacy pre-multi-field norms: one default field (see postings above)
         norms = norms.withColumn("field", F.lit(reader.default_field))
@@ -651,6 +642,7 @@ def consolidate(
     # ---- commit gen+1 ----
     meta["generation"] = gen
     meta["num_segments"] = len(all_ids) - len(merge_ids) + 1
+    meta["segment_ids"] = sorted(set(all_ids) - set(merge_ids) | {target})
     meta["tables"] = dict(meta["tables"])
     meta["tables"]["postings"] = postings_path
     meta["tables"]["norms"] = norms_path

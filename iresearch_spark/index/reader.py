@@ -31,6 +31,8 @@ class IndexReader:
         self._tables: dict[str, DataFrame] = {}
         self._vocab_cache: dict[str, tuple | None] = {}
         self._vocab_sorted_cache: dict[str, tuple | None] = {}
+        self._segment_ids: list[int] | None = None
+        self._files = None
 
     # ------------------------------------------------------------- fields
     @property
@@ -215,8 +217,7 @@ class IndexReader:
     def norms(self, field: str | None = None, all_fields: bool = False) -> DataFrame:
         """Per-segment chunked Norm2 rows. ``field`` scopes to one field's doc
         lengths (the default field when None); ``all_fields=True`` returns
-        every field's rows (the mixed-field kernel path builds a per-field
-        norms map from them)."""
+        every field's rows."""
         df = self._table("norms")
         keep = [
             c
@@ -229,14 +230,6 @@ class IndexReader:
         out = df.select(*keep)
         if not all_fields and "field" in out.columns and self.is_multifield:
             out = out.where(F.col("field") == self._resolve_field(field))
-        dels = self.deletes()
-        if dels is not None:
-            # per-segment sorted delete arrays ride the norms side into the
-            # scoring kernels (the in-memory document_mask analogue)
-            agg = dels.groupBy("segment_id").agg(
-                F.sort_array(F.collect_list("doc_id")).alias("del_ids")
-            )
-            out = out.join(F.broadcast(agg), "segment_id", "left")
         return out
 
     def field_stats(self, field: str | None = None) -> dict:
@@ -276,13 +269,6 @@ class IndexReader:
         ts = sorted(terms)
         rng = (F.col("term") >= ts[0]) & (F.col("term") <= ts[-1])
         return rng & F.col("term").isin(ts)
-
-    def _term_pred(self, terms: list[str], field: str | None = None):
-        """:meth:`_bare_term_pred` plus the field equality on multi-field
-        indexes."""
-        pred = self._bare_term_pred(terms)
-        clause = self._field_clause(field)
-        return pred & clause if clause is not None else pred
 
     def postings_for_terms(
         self, terms: list[str], extra_pred=None, field: str | None = None
@@ -351,6 +337,35 @@ class IndexReader:
         return np.concatenate(
             [vbyte_decode(r["doc_len_enc"]).astype(np.int64) for r in rows]
         ) if rows else np.empty(0, np.int64)
+
+    def segment_ids(self) -> list[int]:
+        """Live segment ids of this snapshot, ascending: the list every commit
+        records in meta, or — legacy meta without it — the distinct ids of
+        the norms table, read once per reader."""
+        if self._segment_ids is None:
+            ids = self.meta.get("segment_ids")
+            if ids is None:
+                ids = self.segment_docs_counts()
+            self._segment_ids = sorted(int(i) for i in ids)
+        return self._segment_ids
+
+    def segment_files(self):
+        """:class:`~iresearch_spark.search.segments.IndexFiles` of this
+        snapshot — the parquet files the per-segment query tasks read, listed
+        once per reader (a local listing, no Spark job)."""
+        if self._files is None:
+            from ..search.segments import IndexFiles, list_parquet
+
+            def files(name: str) -> tuple[str, ...]:
+                v = self.meta["tables"].get(name)
+                paths = [] if v is None else (v if isinstance(v, list) else [v])
+                return tuple(f for p in paths for f in list_parquet(p))
+
+            self._files = IndexFiles(
+                files("postings"), files("norms"), files("docs"), files("deletes"),
+                self.default_field, self.is_multifield,
+            )
+        return self._files
 
     def segment_docs_counts(self) -> dict[int, int]:
         """segment_id → live+masked doc count (sums the default field's norm

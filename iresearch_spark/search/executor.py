@@ -1,19 +1,22 @@
-"""Query execution: filter tree → distributed per-segment kernels → global top-k.
+"""Query execution: filter tree → one task per live segment → global top-k.
 
 The reference lifecycle (SURVEY.md §3.2) maps as:
 
 * ``prepare`` — :func:`compile_plan`: expand multiterm leaves against the
   ``term_dict`` table (pruned scans), collect global stats (field_stats +
   per-term df) once, bake per-term idf into the plan (collectors.cpp analogue).
-* ``execute`` — one ``cogroup(postings_q, norms).applyInPandas`` pass: each
-  segment's kernel decodes only the needed posting lists (VByte blocks), runs
-  the boolean algebra vectorized in numpy (conjunction = sorted-array
-  intersection ≙ conjunction.hpp; disjunction = unique+bincount ≙
-  disjunction.hpp; exclusion ≙ exclusion.hpp), scores BM25, and emits its local
-  top-k under (score desc, doc_id asc).
-* driver top-k — union of per-segment top-k rows is tiny; final global order
-  (score desc, segment_id asc, doc_id asc) ≙ the min-heap loop of
-  utils/index-search.cpp:676-748.
+* ``execute`` — :meth:`Searcher._launch`: a shuffle-free ``mapInPandas`` with
+  one Spark task per LIVE segment (the reference's per-segment execute loop).
+  Each task reads its own segment's postings, norms, deletes and — when keys
+  are wanted — ``doc_key`` rows with pyarrow (:mod:`.segments`, row groups
+  pruned by parquet statistics), decodes only the needed posting lists (VByte
+  blocks), runs the boolean algebra vectorized in numpy (conjunction =
+  sorted-array intersection ≙ conjunction.hpp; disjunction = unique+bincount
+  ≙ disjunction.hpp; exclusion ≙ exclusion.hpp), scores BM25, and emits its
+  local top-k under (score desc, doc_id asc).
+* global top-k — ``orderBy(...).limit(k)`` over the union of per-segment
+  top-k rows, in the same job; final order (score desc, segment_id asc,
+  doc_id asc) ≙ the min-heap loop of utils/index-search.cpp:676-748.
 
 Top-k pruning (the wanderator, formats_10.cpp:2239-2578):
 
@@ -33,22 +36,22 @@ Top-k pruning (the wanderator, formats_10.cpp:2239-2578):
 All bounds are conservative (most favorable norm, strict comparisons), so
 results stay rank-identical to the unpruned evaluation.
 
-``Searcher.search_many`` evaluates a BATCH of queries in one distributed pass:
-postings for the union of all query terms are scanned once per segment, each
-plan is pruned independently in-kernel, and a single window takes the global
-per-query top-k. This amortizes job/scan overhead across queries — the shape
+``Searcher.search_many`` evaluates a BATCH of queries in the same launcher:
+postings for the union of all query terms are read once per segment, each
+plan is pruned independently in-kernel, and the per-query top-k are merged
+after the job. This amortizes job/scan overhead across queries — the shape
 batched query serving takes on a real cluster.
 
-Scale notes: stats collects are O(#query terms); the postings scan is pruned
-by parquet min/max stats over the (field, term)-sorted range layout (field
-equality plus exact, prefix and range term predicates all push down);
+Scale notes: stats collects are O(#query terms); each task's postings read
+is pruned by parquet min/max stats over the (field, term)-sorted range
+layout (field plus exact, prefix, range and wildcard-prefix term bounds);
 per-segment kernels are independent tasks; the only driver-side data is
 #segments × #queries × k candidate rows.
 
 Multi-field: every filter leaf resolves a field (None → index default) with
 its OWN df/doc-length/avgdl stats (per-field collectors, bm25.cpp:204-276).
-A batch touching ONE field pushes ``field == f`` into the postings and norms
-scans and runs the pruned kernels unchanged; a batch spanning several fields
+A batch touching ONE field reads only that field's postings and norms rows
+and runs the pruned kernels unchanged; a batch spanning several fields
 keys kernel lookups by ``field\\x1fterm`` composites, and a single plan
 mixing fields evaluates exact with per-leaf norms (rank-identical — WAND
 bounds need one norm space).
@@ -77,6 +80,7 @@ from ..index.codec import (
 from ..index.reader import IndexReader
 from . import filters as flt
 from .bm25 import B_DEFAULT, K_DEFAULT, BM25Model, ScoreModel, bm25_idf, get_model
+from .segments import SegmentReader
 
 KERNEL_OUT_SCHEMA = "segment_id int, doc_id int, score double"
 MATCH_OUT_SCHEMA = "segment_id int, doc_id int, tf long, dl long"
@@ -358,15 +362,6 @@ def spec_pred(spec: tuple):
     raise ValueError(f"bad spec {spec}")
 
 
-def specs_pred(specs) -> "F.Column | None":
-    """OR of spec predicates (None when no specs)."""
-    pred = None
-    for s in specs:
-        p = spec_pred(s)
-        pred = p if pred is None else (pred | p)
-    return pred
-
-
 @_functools.lru_cache(maxsize=256)
 def _like_regex(pattern: str):
     """Python twin of Spark SQL ``LIKE``: ``%``/``_`` wildcards, backslash
@@ -598,8 +593,9 @@ def expand_multiterm(
             if not keep.any():
                 return [], None
             kt, kd, kdf = cand_terms[keep], d[keep], df_a[idx][keep]
-            lens = np.minimum(
-                np.fromiter((len(t) for t in kt), np.int64, len(kt)), qlen_full
+            # an empty-string vocabulary term clamps to 1 like the target
+            lens = np.clip(
+                np.fromiter((len(t) for t in kt), np.int64, len(kt)), 1, qlen_full
             )
             fboost = 1.0 - kd / lens.astype(np.float64)
             # sort by (fboost desc, term desc): lexsort is stable, keys last-major
@@ -643,7 +639,7 @@ def expand_multiterm(
                 F.lit(1.0)
                 - F.col("dist")
                 / F.least(
-                    F.length("term"), F.lit(max(1, len(pfx) + len(q)))
+                    F.greatest(F.length("term"), F.lit(1)), F.lit(qlen_full)
                 ).cast("double"),
             )
             .orderBy(F.desc("fboost"), F.desc("term"))
@@ -1676,14 +1672,30 @@ class _SegmentNorms:
         return out
 
 
-def _deleted_of(norm_pdf: pd.DataFrame) -> np.ndarray | None:
-    """Per-segment sorted delete array from the norms row (document_mask)."""
-    if "del_ids" not in norm_pdf.columns:
+_NO_IDS = np.empty(0, dtype=np.int64)
+
+
+def _hits(sid: int, ids: np.ndarray, scores: np.ndarray) -> pd.DataFrame:
+    """One segment's (segment_id, doc_id, score) kernel rows."""
+    return pd.DataFrame(
+        {
+            "segment_id": np.full(ids.size, sid, np.int32),
+            "doc_id": ids.astype(np.int32),
+            "score": scores.astype(np.float64),
+        }
+    )
+
+
+def _segment_ctx(seg, scan: ScanSpec, norms_fields, mixed: bool):
+    """(postings views, deletes, default norms, norms-by-field) of one
+    segment for a compiled scan (``norms_fields``/``mixed`` as returned by
+    :meth:`Searcher._norms_ctx`); None when the segment has no norms rows
+    for those fields."""
+    norm_pdf = seg.norms(norms_fields)
+    if len(norm_pdf) == 0:
         return None
-    v = norm_pdf["del_ids"].iloc[0]
-    if v is None or len(v) == 0:
-        return None
-    return np.asarray(v, dtype=np.int64)
+    dl, dl_map = _norms_views(norm_pdf, mixed)
+    return _SegmentViews(seg.postings(scan)), seg.deletes(), dl, dl_map
 
 
 def _mask_deleted(
@@ -1726,19 +1738,6 @@ def _local_topk(ids: np.ndarray, scores: np.ndarray, k: int) -> tuple[np.ndarray
 # --------------------------------------------------------------------------
 
 
-# Spark HashPartitioning hash replica + collision-free partition-count scan
-# (pytest asserts parity with F.hash) — shared with the index builder's
-# segment invert job, which has the same one-kernel-per-task placement need.
-from ..partition import (  # noqa: E402
-    collision_free_partition_count as _collision_free_partition_count,
-    segment_routing_keys as _segment_routing_keys,
-    spark_murmur3_int32 as _spark_murmur3_int32,
-)
-
-#: sentinel for Searcher._routing "not built yet" (None means "fall back")
-_ROUTING_UNSET = object()
-
-
 class Searcher:
     # batch-merge gate: candidate rows reaching the driver merge are bounded
     # by n_segments × n_plans × k (each segment kernel pre-top-k's to ≤k rows
@@ -1774,125 +1773,33 @@ class Searcher:
         if phrase_scoring not in ("exact_df", "sum_of_terms"):
             raise ValueError(f"unknown phrase_scoring {phrase_scoring!r}")
         self.phrase_scoring = phrase_scoring
-        self._part_n: int | None = None  # collision-free segment partitioning
-        self._routing = _ROUTING_UNSET  # (map expr, n) | None, lazily built
-        self._norms_parts: dict = {}  # field-set -> persisted routed norms
-
-    def _segment_ids(self) -> list[int]:
-        """Superset of live segment ids (cheap, no Spark job on current meta)."""
-        nsi = self.reader.meta.get("next_segment_id")
-        if nsi is not None:
-            return list(range(max(1, int(nsi))))
-        # Legacy meta (pre-next_segment_id): a consolidated index can hold
-        # live ids ≥ num_segments (e.g. {0, 4} with num_segments=2), so
-        # range(num_segments) would NOT cover them. Read the real live ids
-        # once (tiny norms collect, cached for the Searcher's lifetime).
-        return sorted(self.reader.segment_docs_counts()) or [0]
-
-    #: above this many segments the routing map literal starts to weigh on
-    #: every plan (2 literals per segment); fall back to the modulus scheme
-    ROUTED_MAX_SEGMENTS = int(os.environ.get("IRS_ROUTED_MAX_SEGMENTS", "1024"))
-
-    def _seg_routing(self):
-        """Zero-empty-task placement: ``(route map expr, n)`` or None.
-
-        See :func:`iresearch_spark.partition.segment_routing_keys` — each
-        segment id gets a substitute routing int whose murmur3 lands in its
-        own bucket with EXACTLY n partitions, so every kernel stage runs one
-        task per segment and nothing else (the collision-free-modulus scheme
-        needed 250 partitions for 32 segments — 218 empty tasks per query,
-        measured ~130 ms of the interactive floor at local[32])."""
-        if self._routing is _ROUTING_UNSET:
-            ids = self._segment_ids()
-            routed = None
-            if len(ids) <= self.ROUTED_MAX_SEGMENTS:
-                rk = _segment_routing_keys(ids)
-                if rk is not None:
-                    keys, n = rk
-                    mapping = F.create_map(
-                        *[F.lit(x) for kv in keys.items() for x in kv]
-                    )
-                    routed = (mapping, n)
-            self._routing = routed
-        return self._routing
-
-    def _seg_groupkey(self) -> str:
-        """Cogroup key matched to the placement: the route column when routed
-        (grouping by segment_id over a route-partitioned child would fail
-        Catalyst's clustered-distribution check and re-exchange), else the
-        raw segment_id."""
-        return "segment_id" if self._seg_routing() is None else "__seg_route"
-
-    def _seg_norms(self, norms: DataFrame, key) -> DataFrame:
-        """Seg-partitioned norms, PERSISTED and cached per field-set key for
-        the Searcher's lifetime — the BM25 working set, held hot exactly as
-        the reference keeps norms in memory per open reader
-        (segment_reader.hpp:35-110). Norms depend only on the immutable
-        index snapshot and the referenced field set, never on the query, so
-        every search after the first skips the norms scan + exchange
-        entirely (one shuffle stage less per interactive query).
-        ``key`` must pin the field selection (("ctx", fields, mixed) or
-        ("field", f)). Release with :meth:`unpersist`."""
-        ent = self._norms_parts.get(key)
-        if ent is None:
-            ent = self._seg_partitioned(norms).persist()
-            self._norms_parts[key] = ent
-        return ent
-
-    @staticmethod
-    def _norms_key(scan: ScanSpec):
-        return ("ctx", tuple(scan.fields), scan.mixed)
 
     def unpersist(self) -> None:
-        """Release the cached norms partitions (idempotent)."""
-        for df in self._norms_parts.values():
-            df.unpersist()
-        self._norms_parts.clear()
+        """No-op: per-segment tasks read the index files directly, so a
+        Searcher holds no persisted data (kept for API compatibility)."""
 
-    def _seg_partition_count(self) -> int:
-        """Smallest partition count that hash-places every POSSIBLE segment
-        id in its own bucket (collision-free by construction).
+    def _launch(self, kernel, schema: str, with_keys: bool = False) -> DataFrame:
+        """Run ``kernel(seg)`` once per LIVE segment — one Spark task each, no
+        shuffle (the reference's per-segment execute loop). ``seg`` is the
+        task's :class:`SegmentReader`; the kernel returns a pandas frame of
+        ``schema`` with a ``doc_id`` column. ``with_keys`` prepends each row's
+        ``doc_key``, read in the same task from the segment's docs rows."""
+        ids = self.reader.segment_ids()
+        files = self.reader.segment_files()
 
-        Hash partitioning with a fixed over-provision factor still collides
-        (8 segments → a [2,1,1,1,1,1,1] bucket occupancy, measured): the
-        collided task runs two segments' kernels SERIALLY while other cores
-        idle — doubling the stage critical path at high parallelism, the
-        dominant N→4N scaling loss for batch serving. Spark's
-        ``repartition(n, col)`` routes by ``pmod(murmur3(col), n)``;
-        :func:`_spark_murmur3_int32` replicates that hash exactly (pytest
-        asserts parity with ``F.hash``), so scanning n upward finds a count
-        where all ids land 1:1 — exactly one segment per task, the
-        reference's per-segment execute loop in parallel, with no sampling
-        (range partitioning samples rows and merges small segments
-        nondeterministically) and no extra jobs."""
-        if self._part_n is None:
-            self._part_n = _collision_free_partition_count(self._segment_ids())
-        return self._part_n
+        def run(batches):
+            for batch in batches:
+                for i in batch["id"].tolist():
+                    seg = SegmentReader(ids[i], files)
+                    out = kernel(seg)
+                    if with_keys:
+                        out.insert(0, "doc_key", seg.keys(out["doc_id"].to_numpy()))
+                    yield out
 
-    def _seg_partitioned(self, df: DataFrame) -> DataFrame:
-        """Explicit one-kernel-per-task placement before the cogroup kernels.
-        Without an explicit repartition, AQE sees a tiny shuffle (the encoded
-        postings are a few MB) and coalesces to ~1 partition — which
-        serializes the CPU-heavy per-segment kernels.
-
-        Routed scheme (default, :meth:`_seg_routing`): a ``__seg_route``
-        column maps each segment id to a routing int placed alone in its own
-        bucket at EXACTLY n partitions — one task per segment, zero empty
-        tasks. Unknown ids (defensive; the id set is a superset by
-        construction) fall through to a distinct out-of-band key so two
-        segments can never share a group. Fallback scheme: hash partitioning
-        on segment_id with a collision-free modulus
-        (see :meth:`_seg_partition_count`)."""
-        routing = self._seg_routing()
-        if routing is None:
-            return df.repartition(self._seg_partition_count(), "segment_id")
-        mapping, n = routing
-        # try_element_at: NULL (not an ANSI error) on a key outside the map
-        route = F.coalesce(
-            F.try_element_at(mapping, F.col("segment_id").cast("int")),
-            F.col("segment_id") + F.lit(1 << 20),
+        n = len(ids)
+        return self.reader.spark.range(0, n, 1, max(1, n)).mapInPandas(
+            run, ("doc_key string, " if with_keys else "") + schema
         )
-        return df.withColumn("__seg_route", route).repartition(n, "__seg_route")
 
     def search(
         self,
@@ -1933,45 +1840,21 @@ class Searcher:
             schema = "doc_key string, segment_id int, doc_id int, score double"
             return spark.createDataFrame([], schema if with_keys else schema.split(", ", 1)[1])
 
-        # pos_enc only when a nested phrase needs it: purely boolean
-        # queries never read position bytes
-        pq = self._batch_postings(scan, with_pos=scan.need_positions)
-        norms, mixed, avgdl, avg_map = self._norms_ctx(scan)
+        fields, mixed, avgdl, avg_map = self._norms_ctx(scan)
 
-        def kernel(post_pdf: pd.DataFrame, norm_pdf: pd.DataFrame) -> pd.DataFrame:
-            # norms cover every segment (one row each); postings may be empty
-            # for this segment — All-based plans still match its docs
-            if len(norm_pdf) == 0:
-                return pd.DataFrame({"segment_id": [], "doc_id": [], "score": []}).astype(
-                    {"segment_id": "int32", "doc_id": "int32", "score": "float64"}
-                )
-            sid = int(norm_pdf["segment_id"].iloc[0])
-            dl, dl_map = _norms_views(norm_pdf, mixed)
-            dels = _deleted_of(norm_pdf)
-            sv = _SegmentViews(post_pdf)
+        def kernel(seg: SegmentReader) -> pd.DataFrame:
+            ctx = _segment_ctx(seg, scan, fields, mixed)
+            if ctx is None:
+                return _hits(seg.sid, _NO_IDS, _NO_IDS)
+            sv, dels, dl, dl_map = ctx
             ids, scores = _eval_root_dispatch(
                 plan, sv, k, model, dt, dels, dl, avgdl, dl_map, avg_map
             )
             ids, scores = _mask_deleted(ids, scores, dels)
-            ids, scores = _local_topk(ids, scores, k)
-            return pd.DataFrame(
-                {
-                    "segment_id": np.full(ids.size, sid, np.int32),
-                    "doc_id": ids.astype(np.int32),
-                    "score": scores.astype(np.float64),
-                }
-            )
+            return _hits(seg.sid, *_local_topk(ids, scores, k))
 
-        local = (
-            self._seg_partitioned(pq)
-            .groupBy(self._seg_groupkey())
-            .cogroup(self._seg_norms(norms, self._norms_key(scan)).groupBy(self._seg_groupkey()))
-            .applyInPandas(kernel, KERNEL_OUT_SCHEMA)
-        )
-        topk = local.orderBy(F.desc("score"), F.asc("segment_id"), F.asc("doc_id")).limit(k)
-        if not with_keys:
-            return topk
-        return self._attach_keys(topk, k)
+        local = self._launch(kernel, KERNEL_OUT_SCHEMA, with_keys)
+        return local.orderBy(F.desc("score"), F.asc("segment_id"), F.asc("doc_id")).limit(k)
 
     def search_ordered(
         self,
@@ -2049,35 +1932,18 @@ class Searcher:
             return spark.createDataFrame([], KERNEL_OUT_SCHEMA)
         model = self.model
         dt = np.float32 if dtype == "float32" else np.float64
-        pq = self._batch_postings(scan, with_pos=scan.need_positions)
-        norms, mixed, avgdl, avg_map = self._norms_ctx(scan)
+        fields, mixed, avgdl, avg_map = self._norms_ctx(scan)
 
-        def kernel(post_pdf: pd.DataFrame, norm_pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(norm_pdf) == 0:
-                return pd.DataFrame({"segment_id": [], "doc_id": [], "score": []}).astype(
-                    {"segment_id": "int32", "doc_id": "int32", "score": "float64"}
-                )
-            sid = int(norm_pdf["segment_id"].iloc[0])
-            dl, dl_map = _norms_views(norm_pdf, mixed)
-            dels = _deleted_of(norm_pdf)
-            sv = _SegmentViews(post_pdf)
-            nctx = (dl_map, avg_map) if mixed else None
-            ids, scores = _eval_plan(plan, sv, dl, avgdl, model, dt, nctx)
-            ids, scores = _mask_deleted(ids, scores, dels)
-            return pd.DataFrame(
-                {
-                    "segment_id": np.full(ids.size, sid, np.int32),
-                    "doc_id": ids.astype(np.int32),
-                    "score": scores.astype(np.float64),
-                }
-            )
+        def kernel(seg: SegmentReader) -> pd.DataFrame:
+            ctx = _segment_ctx(seg, scan, fields, mixed)
+            if ctx is None:
+                return _hits(seg.sid, _NO_IDS, _NO_IDS)
+            sv, dels, dl, dl_map = ctx
+            mixed_ctx = (dl_map, avg_map) if mixed else None
+            ids, scores = _eval_plan(plan, sv, dl, avgdl, model, dt, mixed_ctx)
+            return _hits(seg.sid, *_mask_deleted(ids, scores, dels))
 
-        return (
-            self._seg_partitioned(pq)
-            .groupBy(self._seg_groupkey())
-            .cogroup(self._seg_norms(norms, self._norms_key(scan)).groupBy(self._seg_groupkey()))
-            .applyInPandas(kernel, KERNEL_OUT_SCHEMA)
-        )
+        return self._launch(kernel, KERNEL_OUT_SCHEMA)
 
     # ------------------------------------------------------------- batched
     def prepare(
@@ -2120,177 +1986,55 @@ class Searcher:
         return self.prepare(queries, dtype).execute(k)
 
     def _norms_ctx(self, scan: ScanSpec):
-        """(norms_df, mixed, default avgdl, avgdl-by-field) for a compiled
-        batch. Single-field batches get that field's norms rows only (the
-        field clause pushes down with the parquet scan); mixed batches carry
-        every referenced field's rows and the kernels build a per-field map."""
+        """(norms fields, mixed, default avgdl, avgdl-by-field) for a compiled
+        batch. Single-field batches read that field's norms rows only; mixed
+        batches read every referenced field's rows and the kernels build a
+        per-field map."""
         flds = scan.fields
         if scan.mixed:
-            norms = self.reader.norms(all_fields=True).where(F.col("field").isin(flds))
             avg_map = {f: self.reader.field_stats(f)["avgdl"] for f in flds}
-            return norms, True, avg_map[flds[0]], avg_map
+            return flds, True, avg_map[flds[0]], avg_map
         f = flds[0] if flds else None
-        return self.reader.norms(field=f), False, self.reader.field_stats(f)["avgdl"], None
+        return [f] if f else None, False, self.reader.field_stats(f)["avgdl"], None
 
-    def _batch_postings(self, scan: ScanSpec, with_pos: bool = False) -> DataFrame:
-        """Union pruned postings scan for a compiled batch: per field, the
-        (range + In) term predicate OR the field's pushable tail specs, AND'd
-        with the field equality (multi-field layout is sorted by
-        (field, term), so both clauses reach parquet row-group stats); fields
-        OR together into ONE scan. Mixed batches key rows by the composite
-        ``field\\x1fterm`` so every kernel lookup stays a dict hit."""
-        reader = self.reader
-        pred = None
-        for f in scan.fields:
-            terms = scan.field_terms.get(f, [])
-            specs = scan.field_specs.get(f, [])
-            p = IndexReader._bare_term_pred(sorted(terms)) if terms else None
-            sp = specs_pred(specs)
-            if sp is not None:
-                p = sp if p is None else (p | sp)
-            if p is None:
-                continue
-            clause = reader._field_clause(f)
-            if clause is not None:
-                p = clause & p
-            pred = p if pred is None else (pred | p)
-        term_col = (
-            F.concat_ws(FIELD_SEP, F.col("field"), F.col("term")).alias("term")
-            if scan.mixed
-            else F.col("term")
-        )
-
-        def select_cols(df: DataFrame, pos_col):
-            return df.select(
-                F.col("segment_id"),
-                term_col,
-                F.col("doc_ids_enc"),
-                F.col("freqs_enc"),
-                *([pos_col.alias("pos_enc")] if pos_col is not None else []),
-                F.col("block_last_doc"),
-                F.col("block_doc_off"),
-                F.col("block_freq_off"),
-                F.col("block_max_freq"),
-                F.col("docs_count"),
-                F.col("max_freq"),
-            )
-
-        base = reader.postings()
-        full = base.where(pred if pred is not None else F.lit(False))
-        if not with_pos:
-            return select_cols(full, None)
-        # positional-subset predicate: only the phrase slots' terms
-        pos_pred = None
-        split = False
-        for f in scan.fields:
-            pos_set = set(scan.pos_terms.get(f, []))
-            if pos_set != set(scan.field_terms.get(f, [])) or scan.field_specs.get(f):
-                split = True  # some non-positional rows exist in this field
-            if not pos_set:
-                continue
-            p = IndexReader._bare_term_pred(sorted(pos_set))
-            clause = reader._field_clause(f)
-            if clause is not None:
-                p = clause & p
-            pos_pred = p if pos_pred is None else (pos_pred | p)
-        if pos_pred is None:  # positions requested but no positional terms
-            return select_cols(full, None)
-        if not split:  # every scanned term is positional: one scan
-            return select_cols(full, F.col("pos_enc"))
-        # split scan: position bytes ONLY for the phrase slots' rows — the
-        # rest of the batch's (typically largest) stream stays unread
-        scan_pos = select_cols(base.where(pos_pred), F.col("pos_enc"))
-        scan_rest = select_cols(
-            full.where(~pos_pred), F.lit(None).cast("binary")
-        )
-        return scan_pos.unionByName(scan_rest)
-
-    def _execute_batch(
-        self,
-        plans: dict[str, dict],
-        scan: ScanSpec,
-        k: int,
-        dtype: str,
-        pq: DataFrame | None = None,
-        b_plans=None,
-        norms_ctx=None,
+    def _batch_local(
+        self, plans: dict[str, dict], scan: ScanSpec, k: int, dtype: str, b_plans
     ) -> DataFrame:
+        """The batch kernel stage: per live segment, every plan's local top-k
+        (plans ride the ``b_plans`` broadcast, not the task closure — a
+        1000-plan dict pickled into every task binary costs seconds)."""
         model = self.model
         dt = np.float32 if dtype == "float32" else np.float64
-        spark = self.reader.spark
-        if scan.is_empty() and not any(_plan_has_all(p) for p in plans.values()):
-            return spark.createDataFrame(
-                [], "query string, segment_id int, doc_id int, score double"
-            )
+        fields, mixed, avgdl, avg_map = self._norms_ctx(scan)
 
-        if pq is None:
-            pq = self._seg_partitioned(
-                self._batch_postings(scan, with_pos=scan.need_positions)
-            )
-        if norms_ctx is None:
-            norms, mixed, avgdl, avg_map = self._norms_ctx(scan)
-            norms = self._seg_norms(norms, self._norms_key(scan))
-        else:
-            norms, mixed, avgdl, avg_map = norms_ctx
-        # large batches: ship the plan list as a BROADCAST, not a task-closure
-        # capture — a 1000-plan dict pickled into every task binary costs
-        # seconds of serialize/deserialize PER STAGE, which is pure fixed
-        # overhead that caps batch-serving scalability. PreparedBatch passes a
-        # CACHED broadcast so repeated executes don't even re-pickle the plans
-        # (per-execute fixed cost is what the N→4N query rule charges).
-        if b_plans is None:
-            b_plans = spark.sparkContext.broadcast(list(plans.items()))
-
-        def kernel(post_pdf: pd.DataFrame, norm_pdf: pd.DataFrame) -> pd.DataFrame:
-            plan_items = b_plans.value
-            import os as _os
-            import sys as _sys
-            import time as _time
-
-            _dbg = _os.environ.get("IRS_DEBUG_KERNEL")
-            _t0 = _time.time()
-            empty = pd.DataFrame(
-                {"query": [], "segment_id": [], "doc_id": [], "score": []}
-            ).astype({"query": "object", "segment_id": "int32", "doc_id": "int32", "score": "float64"})
-            if len(norm_pdf) == 0:
-                return empty  # postings may be empty: All plans use norms only
-            sid = int(norm_pdf["segment_id"].iloc[0])
-            dl, dl_map = _norms_views(norm_pdf, mixed)
-            dels = _deleted_of(norm_pdf)
-            sv = _SegmentViews(post_pdf)
-            frames = []
-            for name, plan in plan_items:
+        def kernel(seg: SegmentReader) -> pd.DataFrame:
+            frames = [_hits(seg.sid, _NO_IDS, _NO_IDS).assign(query="")]
+            ctx = _segment_ctx(seg, scan, fields, mixed)
+            if ctx is None:
+                return frames[0]
+            sv, dels, dl, dl_map = ctx
+            for name, plan in b_plans.value:
                 ids, scores = _eval_root_dispatch(
                     plan, sv, k, model, dt, dels, dl, avgdl, dl_map, avg_map
                 )
                 ids, scores = _mask_deleted(ids, scores, dels)
                 ids, scores = _local_topk(ids, scores, k)
                 if ids.size:
-                    frames.append(
-                        pd.DataFrame(
-                            {
-                                "query": name,
-                                "segment_id": np.full(ids.size, sid, np.int32),
-                                "doc_id": ids.astype(np.int32),
-                                "score": scores.astype(np.float64),
-                            }
-                        )
-                    )
-            if _dbg:
-                print(
-                    f"KERNEL sid={sid} start={_t0:.2f} dur={_time.time() - _t0:.2f}",
-                    file=_sys.stderr,
-                    flush=True,
-                )
-            return pd.concat(frames, ignore_index=True) if frames else empty
+                    frames.append(_hits(seg.sid, ids, scores).assign(query=name))
+            return pd.concat(frames, ignore_index=True)
 
-        local = (
-            pq.groupBy(self._seg_groupkey())
-            .cogroup(norms.groupBy(self._seg_groupkey()))
-            .applyInPandas(kernel, "query string, " + KERNEL_OUT_SCHEMA)
-        )
-        n_segments = int(self.reader.meta.get("num_segments", 1))
-        if n_segments * len(plans) * k <= self.BATCH_MERGE_MAX:
+        return self._launch(kernel, "query string, " + KERNEL_OUT_SCHEMA)
+
+    def _execute_batch(
+        self, plans: dict[str, dict], scan: ScanSpec, k: int, dtype: str, b_plans
+    ) -> DataFrame:
+        spark = self.reader.spark
+        if scan.is_empty() and not any(_plan_has_all(p) for p in plans.values()):
+            return spark.createDataFrame(
+                [], "query string, segment_id int, doc_id int, score double"
+            )
+        local = self._batch_local(plans, scan, k, dtype, b_plans)
+        if len(self.reader.segment_ids()) * len(plans) * k <= self.BATCH_MERGE_MAX:
             # driver-side merge — the reference's own top-k heap loop
             # (index-search.cpp:676-748): candidate rows are tiny
             # (#segments × #queries × k), one Spark stage total; the windowed
@@ -2315,16 +2059,6 @@ class Searcher:
             .where(F.col("rn") <= k)
             .drop("rn")
             .orderBy("query", F.desc("score"), F.asc("segment_id"), F.asc("doc_id"))
-        )
-
-    def _attach_keys(self, topk: DataFrame, k: int) -> DataFrame:
-        """Broadcast the ≤k result rows against the docs table (stored-column
-        fetch ≙ columnstore payload read; broadcast side is the tiny one)."""
-        docs = self.reader.docs().select("segment_id", "doc_id", "doc_key")
-        return (
-            docs.join(F.broadcast(topk), ["segment_id", "doc_id"], "inner")
-            .select("doc_key", "segment_id", "doc_id", "score")
-            .orderBy(F.desc("score"), F.asc("segment_id"), F.asc("doc_id"))
         )
 
     def _search_column_exists(self, node: flt.ColumnExists, k: int, with_keys: bool) -> DataFrame:
@@ -2470,55 +2204,43 @@ class Searcher:
         # slack absorbs rank-vs-score FP boundary noise: the exact expression
         # re-ranks the survivors below, so only >16 docs inside one ULP of the
         # k-th rank could ever flip the set
-        local = self.phrase_matches(
+        pdf = self.phrase_matches(
             slots, shifts, local_k=k + 16, rank_params=rank_params, field=fname,
-            slot_fields=slot_fields,
-        )
-        pdf = local.toPandas()
-        spark = self.reader.spark
+            slot_fields=slot_fields, with_keys=with_keys,
+        ).toPandas()
         if len(pdf) == 0:
-            schema = "doc_key string, segment_id int, doc_id int, score double"
-            return spark.createDataFrame(
-                [], schema if with_keys else schema.split(", ", 1)[1]
-            )
-        cand = spark.createDataFrame(
-            pdf[["segment_id", "doc_id", "tf", "dl"]],
-            "segment_id int, doc_id int, tf long, dl long",
-        )
+            return _empty()
+        tf, dl = pdf["tf"].to_numpy(np.float64), pdf["dl"].to_numpy(np.float64)
         boost = node.boost
         k1v, bv = self.k1, self.b
         if mode == "boost":
-            score_col = F.lit(float(boost))
+            score = np.full(len(pdf), float(boost))
         elif idf_sum is not None:
             if mode == "tfidf":
-                score_col = F.lit(boost * idf_sum) * F.sqrt(F.col("tf"))
+                score = (boost * idf_sum) * np.sqrt(tf)
             else:
                 c0 = boost * (k1v + 1.0) * idf_sum
-                score_col = (
-                    F.lit(c0)
-                    * F.col("tf")
-                    / (F.lit(k1v * (1 - bv)) + F.lit(k1v * bv) * F.col("dl") / F.lit(avgdl) + F.col("tf"))
-                )
+                score = c0 * tf / (k1v * (1 - bv) + k1v * bv * dl / avgdl + tf)
         else:
             # exact phrase-df mode: per-segment exact match counts summed into
             # the global dfp (one-pass stats, no extra job)
             dfp = float(pdf.drop_duplicates("segment_id")["seg_matches"].sum())
             if mode == "tfidf":
-                idf = F.log((F.lit(float(n)) + 1.0) / (F.lit(dfp) + 1.0)) + 1.0
-                score_col = F.lit(boost) * F.sqrt(F.col("tf")) * idf
+                idf = np.log((float(n) + 1.0) / (dfp + 1.0)) + 1.0
+                score = boost * np.sqrt(tf) * idf
             else:
-                idf = F.log1p((F.lit(float(n)) - F.lit(dfp) + 0.5) / (F.lit(dfp) + 0.5))
-                c0 = F.lit(boost * (k1v + 1.0)) * idf
-                score_col = (
-                    c0
-                    * F.col("tf")
-                    / (F.lit(k1v * (1 - bv)) + F.lit(k1v * bv) * F.col("dl") / F.lit(avgdl) + F.col("tf"))
-                )
-        scored = cand.withColumn("score", score_col)
-        topk = scored.orderBy(F.desc("score"), F.asc("segment_id"), F.asc("doc_id")).limit(k)
-        if not with_keys:
-            return topk.select("segment_id", "doc_id", "score")
-        return self._attach_keys(topk.select("segment_id", "doc_id", "score"), k)
+                idf = np.log1p((float(n) - dfp + 0.5) / (dfp + 0.5))
+                c0 = boost * (k1v + 1.0) * idf
+                score = c0 * tf / (k1v * (1 - bv) + k1v * bv * dl / avgdl + tf)
+        pdf["score"] = score
+        cols = ["doc_key"] if with_keys else []
+        top = pdf.sort_values(
+            ["score", "segment_id", "doc_id"], ascending=[False, True, True], kind="stable"
+        ).head(k)[cols + ["segment_id", "doc_id", "score"]]
+        schema = "doc_key string, segment_id int, doc_id int, score double"
+        return self.reader.spark.createDataFrame(
+            top, schema if with_keys else schema.split(", ", 1)[1]
+        )
 
     def _search_nested(self, node: flt.Nested, k: int, with_keys: bool) -> DataFrame:
         """ChildToParentJoin (nested_filter.cpp:99-305) as a relational plan:
@@ -2607,22 +2329,16 @@ class Searcher:
         min_match = max(1, int(math.ceil(node.threshold * n_total)))
         boost = float(node.boost)
         uniq = sorted(set(ngrams))
-        fname = getattr(node, "field", None)
-        pq = self.reader.postings_for_terms(uniq, field=fname).select(
-            "segment_id", "term", "doc_ids_enc", "freqs_enc", "pos_enc",
-            "block_last_doc", "block_doc_off", "block_freq_off",
-            "block_max_freq", "docs_count", "max_freq",
-        )
-        norms = self.reader.norms(field=fname)
+        fname = getattr(node, "field", None) or self.reader.default_field
+        scan = ScanSpec({fname: uniq}, need_positions=True, pos_terms={fname: uniq})
 
-        def kernel(post_pdf: pd.DataFrame, norm_pdf: pd.DataFrame) -> pd.DataFrame:
-            empty = pd.DataFrame({"segment_id": [], "doc_id": [], "score": []}).astype(
-                {"segment_id": "int32", "doc_id": "int32", "score": "float64"}
-            )
-            if len(post_pdf) == 0 or len(norm_pdf) == 0:
+        def kernel(seg: SegmentReader) -> pd.DataFrame:
+            sid = seg.sid
+            empty = _hits(sid, _NO_IDS, _NO_IDS)
+            post_pdf = seg.postings(scan)
+            if len(post_pdf) == 0:
                 return empty
-            sid = int(norm_pdf["segment_id"].iloc[0])
-            dels = _deleted_of(norm_pdf)
+            dels = seg.deletes()
             sv = _SegmentViews(post_pdf)
             # (doc, pos, query-slot) streams per distinct matched ngram
             per_term: dict[str, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
@@ -2680,25 +2396,10 @@ class Searcher:
                 return empty
             ids = cand[docs_u[hit]].astype(np.int64)
             scores = (boost * L[hit] / n_total).astype(np.float64)
-            ids_k, scores_k = _local_topk(ids, scores, k)
-            return pd.DataFrame(
-                {
-                    "segment_id": np.full(ids_k.size, sid, np.int32),
-                    "doc_id": ids_k.astype(np.int32),
-                    "score": scores_k,
-                }
-            )
+            return _hits(sid, *_local_topk(ids, scores, k))
 
-        local = (
-            self._seg_partitioned(pq)
-            .groupBy(self._seg_groupkey())
-            .cogroup(self._seg_norms(norms, ("field", fname)).groupBy(self._seg_groupkey()))
-            .applyInPandas(kernel, KERNEL_OUT_SCHEMA)
-        )
-        topk = local.orderBy(F.desc("score"), F.asc("segment_id"), F.asc("doc_id")).limit(k)
-        if not with_keys:
-            return topk
-        return self._attach_keys(topk, k)
+        local = self._launch(kernel, KERNEL_OUT_SCHEMA, with_keys)
+        return local.orderBy(F.desc("score"), F.asc("segment_id"), F.asc("doc_id")).limit(k)
 
     def _sidecar_targets(
         self,
@@ -2938,6 +2639,7 @@ class Searcher:
         rank_params: tuple[str, float, float] | None = None,
         field: str | None = None,
         slot_fields: list[str] | None = None,
+        with_keys: bool = False,
     ) -> DataFrame:
         """All docs matching the (possibly variadic) phrase, with occurrence
         counts.
@@ -2964,66 +2666,43 @@ class Searcher:
         (mode, A=k1(1-b), B=k1·b/avgdl; rank = tf/(A+B·dl+tf) for bm25, tf
         for tfidf, doc order for boost) plus a ``seg_matches`` column carrying
         the segment's exact total match count — the inputs the scale-safe
-        phrase scorer needs without ever shuffling the full match set."""
+        phrase scorer needs without ever shuffling the full match set.
+        ``with_keys`` prepends each row's ``doc_key``."""
         if shifts is None:
             shifts = list(range(len(terms)))
-        _PQ_COLS = [
-            "segment_id",
-            "term",
-            "doc_ids_enc",
-            "freqs_enc",
-            "pos_enc",
-            "block_last_doc",
-            "block_doc_off",
-            "block_freq_off",
-            "block_max_freq",
-            "docs_count",
-            "max_freq",
-        ]
         if slot_fields is not None:
             slots = [[t] if isinstance(t, str) else list(t) for t in terms]
-            by_field: dict[str, set] = {}
-            for f, slot in zip(slot_fields, slots):
-                by_field.setdefault(f, set()).update(slot)
-            pq = None
-            for f in sorted(by_field):
-                pq_f = (
-                    self.reader.postings_for_terms(sorted(by_field[f]), field=f)
-                    .select(*_PQ_COLS)
-                    .withColumn("term", F.concat(F.lit(f + FIELD_SEP), F.col("term")))
-                )
-                pq = pq_f if pq is None else pq.unionByName(pq_f)
-            slots = [
-                [f + FIELD_SEP + t for t in slot]
-                for f, slot in zip(slot_fields, slots)
-            ]
-            norms = self.reader.norms(field=slot_fields[0])
-            field = slot_fields[0]  # norms context tag below
+            fields = list(slot_fields)
         else:
             slots = self._expand_slots(list(terms), field=field)
-            flat_terms = sorted({t for slot in slots for t in slot})
-            pq = self.reader.postings_for_terms(flat_terms, field=field).select(
-                *_PQ_COLS
-            )
-            norms = self.reader.norms(field=field)
-        slot_list = [list(s) for s in slots]
+            fields = [field or self.reader.default_field] * len(slots)
+        scan = ScanSpec({}, need_positions=True)
+        for f, slot in zip(fields, slots):
+            scan.field_terms.setdefault(f, []).extend(slot)
+            scan.pos_terms.setdefault(f, []).extend(slot)
+        # cross-field slots key their terms by ``field\x1fterm`` composites
+        slot_list = [[scan.key(f, t) for t in slot] for f, slot in zip(fields, slots)]
         shift_list = list(shifts)
+        norms_fields = fields[:1]
         out_schema = MATCH_OUT_SCHEMA + (", seg_matches long" if local_k is not None else "")
 
-        def kernel(post_pdf: pd.DataFrame, norm_pdf: pd.DataFrame) -> pd.DataFrame:
+        def kernel(seg: SegmentReader) -> pd.DataFrame:
             cols = {"segment_id": [], "doc_id": [], "tf": [], "dl": []}
             types = {"segment_id": "int32", "doc_id": "int32", "tf": "int64", "dl": "int64"}
             if local_k is not None:
                 cols["seg_matches"] = []
                 types["seg_matches"] = "int64"
             empty = pd.DataFrame(cols).astype(types)
-            if len(post_pdf) == 0 or len(norm_pdf) == 0:
+            post_pdf = seg.postings(scan)
+            if len(post_pdf) == 0:
                 return empty
-            sid = int(norm_pdf["segment_id"].iloc[0])
+            norm_pdf = seg.norms(norms_fields)
+            if len(norm_pdf) == 0:
+                return empty
+            sid = seg.sid
             dl = _SegmentNorms(norm_pdf)
-            dels = _deleted_of(norm_pdf)
             sv = _SegmentViews(post_pdf)
-            out_ids, tf_v = _phrase_seg_tfs(sv, slot_list, shift_list, dels)
+            out_ids, tf_v = _phrase_seg_tfs(sv, slot_list, shift_list, seg.deletes())
             if out_ids.size == 0:
                 return empty
             dl_v = dl[out_ids - 1]
@@ -3050,20 +2729,14 @@ class Searcher:
                 data["seg_matches"] = np.full(out_ids.size, seg_n, np.int64)
             return pd.DataFrame(data)
 
-        return (
-            self._seg_partitioned(pq)
-            .groupBy(self._seg_groupkey())
-            .cogroup(self._seg_norms(norms, ("field", field)).groupBy(self._seg_groupkey()))
-            .applyInPandas(kernel, out_schema)
-        )
+        return self._launch(kernel, out_schema, with_keys)
 
 
 class PreparedBatch:
     """A compiled query batch (``filter::prepared`` analogue): stats baked,
-    multiterm leaves expanded, and the pruned postings scan **persisted** on
-    first execute — the reference's per-segment seek-cookie / proxy_filter
-    caching (term_filter.cpp:40-66, proxy_filter.cpp:34-54): repeated
-    ``execute`` calls run only the scoring kernels over the cached postings."""
+    multiterm leaves expanded, and the plan list broadcast once on first
+    execute, so repeated ``execute`` calls only launch the per-segment
+    kernels (each task reads its segment's postings itself)."""
 
     def __init__(
         self,
@@ -3076,46 +2749,18 @@ class PreparedBatch:
         self.plans = plans
         self.scan = scan
         self.dtype = dtype
-        self._pq: DataFrame | None = None
-        self._norms_ctx = None  # persisted seg-partitioned norms + stats
         self._b_plans = None  # cached plan broadcast (reused across executes)
 
     def execute(self, k: int = 10) -> DataFrame:
-        """Per-execute fixed cost is what batch-serving scaling charges, so
-        everything reusable is cached here: the pruned postings scan and the
-        norms rows persist ALREADY seg-partitioned (cogroup's clustered-
-        distribution requirement is satisfied by the cached partitioning — no
-        per-execute exchange of the postings), and the compiled plan list is
-        broadcast once, not re-pickled per execute."""
         s = self._searcher
-        if self._pq is None and not self.scan.is_empty():
-            self._pq = s._seg_partitioned(
-                s._batch_postings(self.scan, with_pos=self.scan.need_positions)
-            ).persist()
-        if self._norms_ctx is None:
-            norms, mixed, avgdl, avg_map = s._norms_ctx(self.scan)
-            # the Searcher-level norms cache owns the persist (shared with
-            # interactive searches over the same field set)
-            self._norms_ctx = (
-                s._seg_norms(norms, s._norms_key(self.scan)), mixed, avgdl, avg_map
-            )
         if self._b_plans is None:
             self._b_plans = s.reader.spark.sparkContext.broadcast(
                 list(self.plans.items())
             )
-        return s._execute_batch(
-            self.plans, self.scan, k, self.dtype,
-            pq=self._pq, b_plans=self._b_plans, norms_ctx=self._norms_ctx,
-        )
+        return s._execute_batch(self.plans, self.scan, k, self.dtype, self._b_plans)
 
     def unpersist(self) -> None:
-        if self._pq is not None:
-            self._pq.unpersist()
-            self._pq = None
-        if self._norms_ctx is not None:
-            # norms persist is owned by the Searcher's cache (shared across
-            # batches + interactive searches); released by Searcher.unpersist
-            self._norms_ctx = None
+        """Release the plan broadcast (idempotent)."""
         if self._b_plans is not None:
             self._b_plans.unpersist()
             self._b_plans = None

@@ -1007,22 +1007,43 @@ def test_phrase_offsets_nested_under_and(gap_index):
     assert nested == root == [1, 2, 4]
 
 
-def test_cross_field_samepos_union_keeps_pushdown(same_position_index):
-    """The cross-field same-position postings plan is a UNION of per-field
-    pruned scans — each branch must still push its term + field predicates
-    to parquet (the row-group-pruning contract every 100-TB claim rests
-    on), not degenerate into one unpruned scan."""
-    s = Searcher(same_position_index)
-    pq_plan = None
-    # reach the pq the kernel would scan: phrase_matches with slot_fields
-    local = s.phrase_matches(
-        [["300"], ["90"]], [0, 0], slot_fields=["a", "b"]
+def test_cross_field_samepos_union_keeps_pushdown(same_position_index, monkeypatch):
+    """The cross-field same-position postings read serves every slot's
+    field in one per-segment read — each field's term bounds must still
+    prune parquet row groups (the row-group-pruning contract every 100-TB
+    claim rests on), not degenerate into one unpruned scan."""
+    from iresearch_spark.search import segments
+    from iresearch_spark.search.executor import ScanSpec
+
+    read: list[tuple] = []
+
+    class CountingFile(segments.pq.ParquetFile):
+        def read_row_groups(self, row_groups, *args, **kwargs):
+            md = self.metadata
+            leaf = {md.schema.column(j).path: j for j in range(md.num_columns)}
+            for rg in row_groups:
+                read.append(tuple(
+                    segments._stat_range(md, rg, leaf[c]) for c in ("field", "term")
+                ))
+            return super().read_row_groups(row_groups, *args, **kwargs)
+
+    monkeypatch.setattr(segments.pq, "ParquetFile", CountingFile)
+    files = same_position_index.segment_files()
+    total = sum(CountingFile(f).metadata.num_row_groups for f in files.postings)
+    scan = ScanSpec(
+        {"a": ["300"], "b": ["90"]}, need_positions=True,
+        pos_terms={"a": ["300"], "b": ["90"]},
     )
-    plan = local._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("PushedFilters:") >= 2, plan  # one pruned scan per field
-    pushed = plan.split("PushedFilters:")[1:]
-    joined = "|".join(p.split("]")[0] for p in pushed)
-    assert "term," in joined or "EqualTo(term" in joined, plan
+    keys = set()
+    for sid in same_position_index.segment_ids():
+        keys |= set(segments.SegmentReader(sid, files).postings(scan)["term"])
+    assert keys <= {"a\x1f300", "b\x1f90"} and keys, keys
+    assert 0 < len(read) < total, (len(read), total)  # pruned, not a full scan
+    for (flo, fhi), (tlo, thi) in read:
+        wanted = [t for f, t in (("a", "300"), ("b", "90")) if flo <= f <= fhi]
+        assert wanted, (flo, fhi)  # no row group of an unrelated field
+        if flo == fhi:
+            assert any(tlo <= t <= thi for t in wanted), (flo, tlo, thi)
 
 
 def test_same_position_cross_field_nested_and_batch(same_position_index):
